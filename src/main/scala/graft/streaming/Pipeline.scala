@@ -270,10 +270,7 @@ object Pipeline {
       .select(col("symbol"), col("event_time"), col("price"), col("size"))
     lateCols.repartition(3).write.mode("overwrite").parquet(landing)
 
-    val origMode =
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try HarnessGuard.scope(spark, "pipeline_restate_e2e") {
+    HarnessGuard.scope(spark, "pipeline_restate_e2e") {
       val q = spark.readStream.schema(lateCols.schema)
         .option("maxFilesPerTrigger", 1).parquet(landing)
         .writeStream
@@ -299,6 +296,7 @@ object Pipeline {
               .localCheckpoint(true)
             merged.repartition(col("bar_date"))
               .write.partitionBy("bar_date").mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
               .parquet(stateDir)
             ()
           } catch { case e: Throwable =>
@@ -308,8 +306,7 @@ object Pipeline {
         }
         .start()
       q.awaitTermination()
-    } finally
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", origMode)
+    }
 
     Gold.finalizeBars(spark.read.parquet(stateDir).drop("bar_date"))
       .orderBy(col("symbol"), col("bar_start"))

@@ -28,11 +28,37 @@ import graft.operators.{Bronze, Dedup, Gold, Silver}
   * no extra exchanges. At 100 TB/day the knobs that matter are
   * maxFilesPerTrigger (ingest batch sizing) and shuffle partitions;
   * the operators themselves are unchanged.
+  *
+  * Trigger policy: a hop's default trigger follows where it reads from.
+  *  - The INGEST edge ([[kafkaLikeToBronze]]) reads an external source
+  *    and keeps the reference's 5 s ingest clock ([[DefaultTrigger]]):
+  *    that interval sizes its batches and file count.
+  *  - The hops that read ANOTHER HOP's sink ([[bronzeToSilver]],
+  *    [[silverToGold]]) are commit-driven ([[HandoffTrigger]]): they
+  *    poll their upstream's sink log every second, so each picks up an
+  *    upstream commit within ≤1 s, and the gold hop's append-mode flush
+  *    batch runs ≤1 s after the batch that advanced its watermark. On
+  *    one shared 5 s grid all three hops fire on the same instant, so
+  *    hop 2 lists bronze BEFORE hop 1's batch of that tick commits and
+  *    every handoff sits out a whole tick (measured pickups 3.0–4.5 s).
+  *  Event→gold freshness is thus bounded by bar_end + watermark + ≤1
+  *  ingest tick + two ≤1 s handoffs + the three batch times.
+  *  AvailableNow callers (the e2e pipelines, tests) pass their trigger
+  *  explicitly and are unaffected.
   */
 object Streams {
 
   val DefaultWatermark = "2 minutes"
+  /** The ingest clock: reference kafka_to_bronze_trades.py:22. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
+  /** The commit-driven handoff poll for hops fed by another hop's sink.
+    * 1 s bounds the pickup delay at ≤1 s for ~0.02 cores more idle CPU
+    * (each idle poll re-reads the upstream sink log; three idle hops
+    * measured 0.027 cores against 0.011 on the 5 s clock).
+    * `ProcessingTime(0)` is a busy poll: ~0.65 cores idle for under 1 s
+    * more freshness.
+    */
+  val HandoffTrigger: Trigger = Trigger.ProcessingTime("1 second")
 
   /** Streaming commit tuning (T8, reference kafka_to_bronze_trades.py:
     * 38-40): manifest-based exactly-once file commits + short metadata
@@ -454,7 +480,7 @@ object Streams {
     */
   def bronzeToSilver(spark: SparkSession, bronzeDir: String, silverDir: String,
                      checkpoint: String, watermark: String = DefaultWatermark,
-                     trigger: Trigger = DefaultTrigger,
+                     trigger: Trigger = HandoffTrigger,
                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
     parquetSink(
       // repartition on the sink partition column: without it the deduped
@@ -486,7 +512,7 @@ object Streams {
   def silverToGold(spark: SparkSession, silverDir: String, goldDir: String,
                    checkpoint: String, barWidth: String = "1 minute",
                    watermark: String = DefaultWatermark,
-                   trigger: Trigger = DefaultTrigger,
+                   trigger: Trigger = HandoffTrigger,
                    maxFilesPerTrigger: Option[Int] = None,
                    partitionCols: Seq[String] = Seq("bar_date", "symbol")): StreamingQuery =
     parquetSink(
@@ -498,28 +524,6 @@ object Streams {
       goldDir, checkpoint, partitionCols = partitionCols,
       trigger = trigger).start()
 
-  /** Batch backfill for hop 2 (bronze_to_silver_trades.py:79-88): same
-    * transform, batch write, append + partitionBy.
-    */
-  def backfillSilver(spark: SparkSession, bronzeDir: String,
-                     silverDir: String): Unit =
-    Silver.dedup(Silver.projectToSilver(
-        spark.read.schema(Schemas.bronze).parquet(bronzeDir)))
-      .write.mode("append").partitionBy("event_date")
-      .option("compression", "snappy").parquet(silverDir)
-
-  /** LIVE bars: update-mode aggregation + foreachBatch upsert via
-    * DYNAMIC partition overwrite. Append mode only emits a bar once the
-    * watermark passes bar_end (§T3) — correct but minutes stale; this
-    * sink keeps the current in-progress bar queryable by rewriting only
-    * the partitions that changed in each micro-batch. The partition key
-    * includes bar_start so one partition == one bar and the overwrite is
-    * a true per-bar upsert (coarser keys would drop sibling bars). This
-    * is the parquet-dir equivalent of a Delta MERGE; per-batch write
-    * cost is bounded by bars-touched-per-trigger, not table size. Meant
-    * for the live tail — the finalized append table remains the
-    * long-term store (compact the tail into it periodically).
-    */
   /** True iff `e` is the missing/empty-sink analysis error a FIRST
     * micro-batch legitimately hits reading its own output dir back:
     * the path doesn't exist yet, or exists with no parquet footers to
@@ -580,26 +584,30 @@ object Streams {
         // materialize the merge before the dynamic overwrite deletes
         // the hour dirs it read.
         val merged = existing.unionByName(b).localCheckpoint(true)
-        val prev = ss.conf
-          .getOption("spark.sql.sources.partitionOverwriteMode")
-        ss.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try merged.write.mode("overwrite")
           .partitionBy("bar_date", "bar_hour")
+          .option("partitionOverwriteMode", "dynamic")
           .option("compression", "snappy").parquet(goldDir)
         catch { case e: Throwable =>
           HarnessGuard.record(s"live-bars hourly upsert batch failed: $e")
           throw e
         }
-        finally prev match {
-          case Some(v) => ss.conf
-            .set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => ss.conf
-            .unset("spark.sql.sources.partitionOverwriteMode")
-        }
       }
       .start()
   }
 
+  /** LIVE bars: update-mode aggregation + foreachBatch upsert via
+    * DYNAMIC partition overwrite. Append mode only emits a bar once the
+    * watermark passes bar_end (§T3) — correct but minutes stale; this
+    * sink keeps the current in-progress bar queryable by rewriting only
+    * the partitions that changed in each micro-batch. The partition key
+    * includes bar_start so one partition == one bar and the overwrite is
+    * a true per-bar upsert (coarser keys would drop sibling bars). This
+    * is the parquet-dir equivalent of a Delta MERGE; per-batch write
+    * cost is bounded by bars-touched-per-trigger, not table size. Meant
+    * for the live tail — the finalized append table remains the
+    * long-term store (compact the tail into it periodically).
+    */
   def silverToGoldLive(spark: SparkSession, silverDir: String, goldDir: String,
                        checkpoint: String, barWidth: String = "1 minute",
                        watermark: String = DefaultWatermark,
@@ -610,22 +618,13 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val prev = batch.sparkSession.conf
-          .getOption("spark.sql.sources.partitionOverwriteMode")
-        batch.sparkSession.conf
-          .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try batch.write.mode("overwrite")
           .partitionBy("bar_date", "symbol", "bar_start")
+          .option("partitionOverwriteMode", "dynamic")
           .option("compression", "snappy").parquet(goldDir)
         catch { case e: Throwable =>
           HarnessGuard.record(s"live-bars upsert batch failed: $e")
           throw e
-        }
-        finally prev match {
-          case Some(v) => batch.sparkSession.conf
-            .set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => batch.sparkSession.conf
-            .unset("spark.sql.sources.partitionOverwriteMode")
         }
       }
       .start()

@@ -49,14 +49,22 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("e2e streamed restatement equals full batch recompute at sf0.001") {
+    // the session is pinned to STATIC overwrite: only the per-write
+    // dynamic option keeps the fold from truncating every untouched
+    // bar_date partition, and the drain must leave the conf untouched
+    val key = "spark.sql.sources.partitionOverwriteMode"
     val dir = "/root/testdata/sf0.001"
-    val got = graft.streaming.Pipeline.restateE2E(spark, dir)
-      .collect().toSeq.map(_.toString)
-    val want = graft.operators.Gold.bars(
-        graft.operators.Trades.fromEvents(Tables.events(spark, dir)))
-      .orderBy(col("symbol"), col("bar_start"))
-      .collect().toSeq.map(_.toString)
-    assert(want.nonEmpty)
-    assert(got == want)
+    spark.conf.set(key, "static")
+    try {
+      // built first: reading events sets a parquet-read conf of its own
+      val want = Gold.bars(Trades.fromEvents(Tables.events(spark, dir)))
+        .orderBy(col("symbol"), col("bar_start"))
+      val before = spark.conf.getAll
+      val got = Pipeline.restateE2E(spark, dir).collect().toSeq
+      assert(spark.conf.getAll == before)
+      val wantRows = want.collect().toSeq
+      assert(wantRows.nonEmpty)
+      assert(got.map(_.toString) == wantRows.map(_.toString))
+    } finally spark.conf.unset(key)
   }
 }

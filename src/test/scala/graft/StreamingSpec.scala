@@ -182,6 +182,102 @@ class StreamingSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("hops 1-3 under their default triggers: ≤2 s handoffs, gold exact") {
+    import java.nio.file.{Paths, StandardCopyOption}
+    import graft.streaming.Pipeline
+    val root = tmpDir("graft_prod_triggers")
+    val Seq(rendered, staging, landing, bronze, silver, gold) =
+      Seq("rendered", "staging", "landing", "bronze", "silver", "gold")
+        .map(d => s"$root/$d")
+    Seq(staging, landing, bronze, silver).foreach(d =>
+      Files.createDirectories(Paths.get(d)))
+    // ten drops of 30 s event time, 12 trades over 3 symbols each. Every
+    // 7th trade is replayed (same payload, new offset) one drop later;
+    // every 5th is held back two drops (60 s, inside the 2-minute
+    // watermark). The last drop holds only the watermark-flush sentinel.
+    val t0 = ts("2024-01-01 10:00:00").getTime
+    val syms = Seq("BTC/USD", "ETH/USD", "SOL/USD")
+    val rows = for {
+      d <- 0 until 10; i <- 0 until 12
+      n = d * 12 + i
+      ms = t0 + d * 30000L + i * 2500L
+      at = if (n % 5 == 0) d + 2 else d
+      (off, drop) <- Seq(n.toLong -> at) ++
+        (if (n % 7 == 0) Seq((n + 100000L) -> (at + 1)) else Nil)
+    } yield (off, drop, syms(i % 3), ms, 100.0 + n % 17, 1.0 + n % 3)
+    val nDrops = 14
+    val sentinel = (-1L, nDrops - 1, Pipeline.SentinelSymbol,
+      t0 + 10 * 30000L + 600000L, 1.0, 1.0)
+    (rows :+ sentinel).toDF("offset", "drop", "symbol", "ms", "price", "size")
+      .select(col("drop"), lit("crypto.trades").as("topic"),
+        lit(0).as("partition"), col("offset"),
+        timestamp_millis(col("ms")).as("timestamp"),
+        lit(0).as("timestampType"), col("symbol").cast("binary").as("key"),
+        to_json(struct(lit("kraken").as("exchange"), col("symbol"),
+          col("price"), col("size"), lit("buy").as("side"),
+          lit("market").as("order_type"), col("ms").as("ts_event"),
+          col("ms").as("ts_ingest"))).cast("binary").as("value"))
+      .repartition(col("drop")).write.partitionBy("drop").parquet(rendered)
+    val drops = (0 until nDrops)
+      .filter(k => new java.io.File(s"$rendered/drop=$k").isDirectory)
+      .map { k =>
+        val name = f"drop-$k%02d.parquet"
+        val part = new java.io.File(s"$rendered/drop=$k").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head
+        Files.move(part.toPath, Paths.get(staging, name))
+        name
+      }
+
+    val qs = Seq(
+      Streams.kafkaLikeToBronze(
+        spark.readStream.schema(Schemas.kafka).parquet(landing), bronze,
+        s"$root/ck1"),
+      Streams.bronzeToSilver(spark, bronze, silver, s"$root/ck2"),
+      Streams.silverToGold(spark, silver, gold, s"$root/ck3"))
+    try {
+      drops.foreach { name =>
+        Files.move(Paths.get(staging, name), Paths.get(landing, name),
+          StandardCopyOption.ATOMIC_MOVE)
+        Thread.sleep(600)
+      }
+      val want = Gold.bars(Silver.dedup(Silver.projectToSilver(
+          Bronze.fromKafkaLike(spark.read.schema(Schemas.kafka).parquet(landing)))))
+        .filter(col("symbol") =!= Pipeline.SentinelSymbol)
+      val wantRows = want.orderBy("symbol", "bar_start").collect().toSeq
+      def got() = spark.read.parquet(gold)
+        .filter(col("symbol") =!= Pipeline.SentinelSymbol)
+        .select(want.columns.map(col).toSeq: _*)
+      def landed(): Long =
+        try got().count()
+        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+      val deadline = System.currentTimeMillis() + 90000L
+      while (landed() < wantRows.size && qs.forall(_.isActive) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(200)
+      qs.foreach(q => q.exception.foreach(e => fail(e)))
+
+      val gotRows = got().orderBy("symbol", "bar_start").collect().toSeq
+      val keys = gotRows.map(r => (r.getAs[String]("symbol"),
+        r.getAs[java.sql.Timestamp]("bar_start")))
+      assert(keys.distinct.size == keys.size, "a bar was emitted twice")
+      assert(wantRows.size == 3 * 5) // 3 symbols × 5 minutes
+      assert(gotRows == wantRows)
+
+      // each downstream hop's first data batch starts within 2 s of the
+      // end of its upstream's first data batch (a shared 5 s clock makes
+      // this ~4 s: the downstream lists its source before the commit)
+      def firstData(q: org.apache.spark.sql.streaming.StreamingQuery) =
+        q.recentProgress.filter(_.numInputRows > 0).minBy(_.batchId)
+      def startMs(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+        java.time.Instant.parse(p.timestamp).toEpochMilli
+      qs.zip(Seq("hop1", "hop2", "hop3")).sliding(2).foreach {
+        case Seq((up, _), (down, hop)) =>
+          val u = firstData(up)
+          val gap = startMs(firstData(down)) - (startMs(u) + u.batchDuration)
+          assert(gap <= 2000L, s"$hop picked up $gap ms after its upstream")
+      }
+    } finally qs.foreach(_.stop())
+  }
+
   test("live bars sink upserts in-progress bars (update mode + dynamic overwrite)") {
     val silverDir = tmpDir("graft_silver_live")
     val goldDir = tmpDir("graft_gold_live")
