@@ -19,7 +19,6 @@ object Demo {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val spark = GraftSession.builder(master = "local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    Streams.applyCommitTuning(spark)
 
     def tmp(p: String) = Files.createTempDirectory(p).toString
     val (bronzeDir, silverDir, goldDir) =

@@ -2,11 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.collection.concurrent.TrieMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.HopSession
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types.StructType
 
-import graft.{Schemas, Tables}
+import graft.Tables
 import graft.operators.Bronze
 
 /** End-to-end streaming parity: the full three-hop pipeline (wire →
@@ -16,6 +20,28 @@ import graft.operators.Bronze
   * DuckDB bars oracle — converting the per-hop streaming tests into one
   * oracle-backed whole-pipeline guarantee (reference
   * scripts/collect_data.sh runs the same three jobs back to back).
+  * The other nine e2e pipelines here do the same for one streaming
+  * family each.
+  *
+  * Every pipeline shares one staging lifecycle ([[Staging]]):
+  *  1. a staging tree under `java.io.tmpdir` (`graft_<x>e2e_` prefix),
+  *     reclaimed at JVM exit — the returned frame reads its sinks
+  *     lazily, so the tree outlives the call;
+  *  2. batch-written inputs in that tree: landing files and nightly
+  *     state, on the caller's session;
+  *  3. the hops, each drained to completion (AvailableNow), inside one
+  *     [[HarnessGuard.scope]], started from a CLONE of the caller's
+  *     session that carries the hop shuffle-partition count. The
+  *     caller's conf never changes; each hop's offset log records the
+  *     count it ran with. Batch work inside a fold (state reads) and
+  *     the static side of a stream-static join stay on the caller's
+  *     session: a clone has its own class loader, so batch plans run on
+  *     it miss the generated-code cache (27 recompiles, +1.2 s per
+  *     restateE2E call at sf0.1);
+  *  4. a batch read-back on the caller's session. Every dir remembers
+  *     the schema of the frame that wrote it, so sources and read-backs
+  *     spell no schema out, and an empty sink reads back empty instead
+  *     of failing schema inference.
   *
   * Two deliberate semantics:
   *  - The wire serializes event time as ms epochs
@@ -52,14 +78,66 @@ object Pipeline {
     ()
   }
 
+  private val an = Trigger.AvailableNow()
+
+  /** One pipeline's staging tree (`prefix` names it) and the lifecycle
+    * around its hops, stated in the object doc.
+    */
+  private final class Staging(spark: SparkSession, prefix: String) {
+    private val root = Files.createTempDirectory(prefix)
+    stagingDirs.add(root)
+    private val schemas = TrieMap[String, StructType]()
+
+    def apply(name: String): String = s"$root/$name"
+
+    /** Batch-writes `df` as the dir `name` (landing files, nightly state). */
+    def land(df: DataFrame, name: String, mode: String = "overwrite"): Unit = {
+      schemas(name) = df.schema
+      df.write.mode(mode).parquet(this(name))
+    }
+
+    /** The dir `name`, read back on the caller's session. */
+    def read(name: String): DataFrame =
+      spark.read.schema(schemas(name)).parquet(this(name))
+
+    /** Runs `hops` inside `label`'s guard scope on the hop session:
+      * `partitions` shuffle partitions, or the caller's count if None.
+      */
+    def drain(label: String, partitions: Option[Int] = None)(
+        hops: Hops => Unit): Unit = {
+      val hop = new Hops(HopSession(spark, partitions))
+      HarnessGuard.scope(spark, label)(hops(hop))
+    }
+
+    /** The hop verbs on the hop session `spark`; each drains to the end. */
+    final class Hops(val spark: SparkSession) {
+      /** A file stream over `name`; `maxFiles` > 0 caps files per batch. */
+      def source(name: String, maxFiles: Int = 0): DataFrame = {
+        val r = spark.readStream.schema(schemas(name))
+        if (maxFiles > 0) r.option("maxFilesPerTrigger", maxFiles.toLong)
+        r.parquet(Staging.this(name))
+      }
+
+      /** Drains `df` into the append parquet sink `name`. */
+      def toParquet(df: DataFrame, name: String): Unit = {
+        schemas(name) = df.schema
+        Streams.parquetSink(df, Staging.this(name), Staging.this(s"ck_$name"),
+          trigger = an).start().awaitTermination()
+      }
+
+      /** Drains `src`, handing each micro-batch to `f`. */
+      def fold(src: DataFrame)(f: DataFrame => Unit): Unit =
+        src.writeStream
+          .option("checkpointLocation", Staging.this("ck"))
+          .trigger(an)
+          .foreachBatch((batch: DataFrame, _: Long) =>
+            Streams.recorded("foreachBatch")(f(batch)))
+          .start().awaitTermination()
+    }
+  }
+
   def goldE2E(spark: SparkSession, dir: String): DataFrame = {
-    val basePath = Files.createTempDirectory("graft_e2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val bronzeDir = s"$base/bronze"
-    val silverDir = s"$base/silver"
-    val goldDir = s"$base/gold"
+    val st = new Staging(spark, "graft_e2e_")
 
     // gen: wire-format landing files + the watermark-flush sentinel
     val events = Tables.events(spark, dir)
@@ -79,29 +157,9 @@ object Pipeline {
         lit("buy").as("side"), lit("limit").as("order_type"),
         lit(flushTs.getTime).as("ts_event"),
         lit(flushTs.getTime).as("ts_ingest"))).cast("binary").as("value"))
-    wire.unionByName(sentinel).write.mode("overwrite").parquet(landing)
+    st.land(wire.unionByName(sentinel), "landing")
 
-    // the three hops, each drained to completion (AvailableNow)
-    def timed[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[pipeline] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-      r
-    }
-    // dev-only per-hop attribution (SPARK_GRAFT_STREAM_PROFILE=1):
-    // dump every micro-batch's StreamingQueryProgress JSON — durationMs
-    // (addBatch/commitOffsets/walCommit/latestOffset) and stateOperators
-    // (commit times, rows) — the evidence for which fixed cost dominates
-    // a hop. Off on the bench/driver path (env unset → zero behavior
-    // change; awaitTermination is what the hop already did).
-    def drained(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-      q.awaitTermination()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-        q.recentProgress.foreach(p =>
-          System.err.println(s"[progress] ${p.json}"))
-    }
-    val an = Trigger.AvailableNow()
+    // the three hops, each drained to completion (AvailableNow).
     // Fewer shuffle/state partitions for the streaming hops: each
     // stateful operator keeps one state store per shuffle partition,
     // and every micro-batch commits every store — at this volume the
@@ -109,25 +167,21 @@ object Pipeline {
     // actual row work. 8 stores cut that fixed cost ~4× with identical
     // results (dedup/agg are partition-count independent). On a real
     // cluster this knob is sized to state volume, not CPU count.
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try HarnessGuard.scope(spark, "pipeline_gold_e2e") {
-      timed("hop1 wire->bronze")(drained(Streams.kafkaLikeToBronze(
-        spark.readStream.schema(Schemas.kafka).parquet(landing),
-        bronzeDir, s"$base/ck1", trigger = an)))
-      timed("hop2 bronze->silver")(drained(Streams.bronzeToSilver(spark,
-        bronzeDir, silverDir, s"$base/ck2", trigger = an)))
+    st.drain("pipeline_gold_e2e", Some(8)) { hop =>
+      Streams.kafkaLikeToBronze(hop.source("landing"), st("bronze"),
+        st("ck1"), trigger = an).awaitTermination()
+      Streams.bronzeToSilver(hop.spark, st("bronze"), st("silver"),
+        st("ck2"), trigger = an).awaitTermination()
       // date-only gold partitioning: the harness has 1356 symbols, far past
       // the point where per-symbol dirs make sense (see silverToGold's
       // partitionCols note); parity is about bar CONTENT, and the
       // (bar_date, symbol) layout incl. `/`-escaping is round-trip tested
       // in StreamingSpec at small scale.
-      timed("hop3 silver->gold")(drained(Streams.silverToGold(spark,
-        silverDir, goldDir, s"$base/ck3", trigger = an,
-        partitionCols = Seq("bar_date"))))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+      Streams.silverToGold(hop.spark, st("silver"), st("gold"), st("ck3"),
+        trigger = an, partitionCols = Seq("bar_date")).awaitTermination()
+    }
 
-    spark.read.parquet(goldDir)
+    spark.read.parquet(st("gold"))
       .filter(col("symbol") =!= SentinelSymbol)
       .select(col("symbol"), col("bar_start"), col("bar_end"), col("open"),
         col("high"), col("low"), col("close"), col("volume"), col("vwap"),
@@ -157,13 +211,7 @@ object Pipeline {
     */
   def corpusE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, TextAnalysis}
-    val basePath = Files.createTempDirectory("graft_ce2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val indexDir = s"$base/sig_index"
-    val silverDir = s"$base/silver"
-    val flagsDir = s"$base/flags"
+    val st = new Staging(spark, "graft_ce2e_")
 
     val docs = Tables.documents(spark, dir)
     val isHist = pmod(graft.functions.TextFunctions.hash60(
@@ -171,55 +219,26 @@ object Pipeline {
     // the "nightly" state: history signature index persisted once;
     // history text is never read by the streaming side
     Dedup.minhashSignatures(docs.filter(isHist))
-      .write.mode("overwrite").parquet(indexDir)
-    val histSigsT = spark.read.parquet(indexDir)
-    docs.filter(!isHist).select(col("doc_id"), col("text"))
-      .repartition(4).write.mode("overwrite").parquet(landing)
+      .write.mode("overwrite").parquet(st("sig_index"))
+    st.land(docs.filter(!isHist).select(col("doc_id"), col("text"))
+      .repartition(4), "landing")
 
-    val an = Trigger.AvailableNow()
-    val inSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val silverSchema = inSchema.add("quality_score",
-      org.apache.spark.sql.types.DoubleType)
-    HarnessGuard.scope(spark, "pipeline_corpus_e2e") {
+    st.drain("pipeline_corpus_e2e") { hop =>
       // hop 1: landing -> quality-passed silver docs (in-row gate)
-      Streams.parquetSink(
-        spark.readStream.schema(inSchema)
-          .option("maxFilesPerTrigger", 2).parquet(landing)
+      hop.toParquet(hop.source("landing", 2)
           .select(col("doc_id"), col("text"),
             TextAnalysis.qualityScoreCol.as("quality_score"))
-          .filter(col("quality_score") >= 0.35),
-        silverDir, s"$base/ck1", trigger = an)
-        .start().awaitTermination()
+          .filter(col("quality_score") >= 0.35), "silver")
       // hop 2: silver -> near-dup flags vs the persisted index
-      Streams.parquetSink(
-        Streams.incrementalDedupStream(
-          spark.readStream.schema(silverSchema)
-            .option("maxFilesPerTrigger", 2).parquet(silverDir),
-          histSigsT),
-        flagsDir, s"$base/ck2", trigger = an)
-        .start().awaitTermination()
+      hop.toParquet(Streams.incrementalDedupStream(hop.source("silver", 2),
+        spark.read.parquet(st("sig_index"))), "flags")
     }
     // ship: sink-side compaction — quality survivors minus flagged
-    // (explicit schema like the flags read: if no delta doc passed the
-    // quality gate the sink has no data files and inference would fail)
-    val silver = spark.read.schema(silverSchema).parquet(silverDir)
-    val flagged = spark.read.schema(
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("hist_doc",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("delta_doc",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("n_matching",
-          org.apache.spark.sql.types.IntegerType),
-        org.apache.spark.sql.types.StructField("est_jaccard",
-          org.apache.spark.sql.types.DoubleType))))
-      .parquet(flagsDir)
-      .select(col("delta_doc").as("doc_id"))
-    silver.join(flagged, Seq("doc_id"), "left_anti")
+    // (if no delta doc passed the quality gate the sinks have no data
+    // files; their remembered schemas make that an empty read)
+    st.read("silver")
+      .join(st.read("flags").select(col("delta_doc").as("doc_id")),
+        Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("quality_score"))
       .orderBy(col("doc_id"))
   }
@@ -247,11 +266,7 @@ object Pipeline {
     */
   def restateE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Gold, Trades}
-    val basePath = Files.createTempDirectory("graft_re2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val stateDir = s"$base/bar_state"
+    val st = new Staging(spark, "graft_re2e_")
 
     val trades = Trades.fromEvents(Tables.events(spark, dir))
     val isOnTime = pmod(graft.functions.TextFunctions.hash60(
@@ -264,51 +279,37 @@ object Pipeline {
     Gold.normalizeState(Gold.barState(trades.filter(isOnTime)))
       .withColumn("bar_date", to_date(col("bar_start")))
       .repartition(col("bar_date"))
-      .write.partitionBy("bar_date").mode("overwrite").parquet(stateDir)
+      .write.partitionBy("bar_date").mode("overwrite").parquet(st("bar_state"))
     // the late delta lands as files; 3 files → 3 micro-batches
-    val lateCols = trades.filter(!isOnTime)
+    st.land(trades.filter(!isOnTime)
       .select(col("symbol"), col("event_time"), col("price"), col("size"))
-    lateCols.repartition(3).write.mode("overwrite").parquet(landing)
+      .repartition(3), "landing")
 
-    HarnessGuard.scope(spark, "pipeline_restate_e2e") {
-      val q = spark.readStream.schema(lateCols.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (delta: DataFrame, _: Long) =>
-          try {
-            val deltaState = Gold.barState(delta)
-            val touchedDates = deltaState
-              .select(to_date(col("bar_start")).as("bar_date")).distinct()
-            val hist = spark.read.parquet(stateDir)
-            val histTouched = hist
-              .join(broadcast(touchedDates), Seq("bar_date"), "left_semi")
-              .drop("bar_date")
-            // INVARIANT: the merged state is read FROM stateDir and
-            // written back TO stateDir in this same batch — the EAGER
-            // localCheckpoint(true) must fully materialize the merge
-            // BEFORE mode("overwrite") deletes the files it read, or
-            // the overwrite silently truncates state to the delta.
-            val merged = Gold.normalizeState(
-                Gold.mergeBarStates(histTouched, deltaState))
-              .withColumn("bar_date", to_date(col("bar_start")))
-              .localCheckpoint(true)
-            merged.repartition(col("bar_date"))
-              .write.partitionBy("bar_date").mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .parquet(stateDir)
-            ()
-          } catch { case e: Throwable =>
-            HarnessGuard.record(s"restate foreachBatch failed: $e")
-            throw e
-          }
-        }
-        .start()
-      q.awaitTermination()
+    st.drain("pipeline_restate_e2e") { hop =>
+      hop.fold(hop.source("landing", 1)) { delta =>
+        val deltaState = Gold.barState(delta)
+        val touchedDates = deltaState
+          .select(to_date(col("bar_start")).as("bar_date")).distinct()
+        val histTouched = spark.read.parquet(st("bar_state"))
+          .join(broadcast(touchedDates), Seq("bar_date"), "left_semi")
+          .drop("bar_date")
+        // INVARIANT: the merged state is read FROM bar_state and
+        // written back TO bar_state in this same batch — the EAGER
+        // localCheckpoint(true) must fully materialize the merge
+        // BEFORE mode("overwrite") deletes the files it read, or
+        // the overwrite silently truncates state to the delta.
+        val merged = Gold.normalizeState(
+            Gold.mergeBarStates(histTouched, deltaState))
+          .withColumn("bar_date", to_date(col("bar_start")))
+          .localCheckpoint(true)
+        merged.repartition(col("bar_date"))
+          .write.partitionBy("bar_date").mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .parquet(st("bar_state"))
+      }
     }
 
-    Gold.finalizeBars(spark.read.parquet(stateDir).drop("bar_date"))
+    Gold.finalizeBars(spark.read.parquet(st("bar_state")).drop("bar_date"))
       .orderBy(col("symbol"), col("bar_start"))
   }
 
@@ -334,53 +335,33 @@ object Pipeline {
     */
   def retireE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Dedup, Lifecycle}
-    val basePath = Files.createTempDirectory("graft_te2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/takedowns"
-    val indexDir = s"$base/sig_index"
-    val ledgerDir = s"$base/ledger"
+    val st = new Staging(spark, "graft_te2e_")
 
     val docs = Tables.documents(spark, dir)
     // nightly state: payload index + add-ledger persisted once
-    Dedup.minhashSignatures(docs).write.mode("overwrite").parquet(indexDir)
+    Dedup.minhashSignatures(docs).write.mode("overwrite")
+      .parquet(st("sig_index"))
     docs.select(col("doc_id"),
         pmod(graft.functions.TextFunctions.hash60(
           concat(lit("b_"), col("doc_id"))), lit(4)).cast("int")
           .as("batch_id"),
         lit("add").as("op"))
-      .write.mode("overwrite").parquet(ledgerDir)
+      .write.mode("overwrite").parquet(st("ledger"))
     // takedown requests land as files; 2 files → 2 micro-batches
     val isRet = pmod(graft.functions.TextFunctions.hash60(
       concat(lit("ret_"), col("doc_id"))), lit(100)) >= 90
-    docs.filter(isRet).select(col("doc_id"))
-      .repartition(2).write.mode("overwrite").parquet(landing)
+    st.land(docs.filter(isRet).select(col("doc_id")).repartition(2),
+      "takedowns")
 
-    val idSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType)))
-    HarnessGuard.scope(spark, "pipeline_retire_e2e") {
-      val q = spark.readStream.schema(idSchema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-        .writeStream
-        .option("checkpointLocation", s"$base/ck")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (delta: DataFrame, _: Long) =>
-          try {
-            Lifecycle.delBatch(delta, 4)
-              .write.mode("append").parquet(ledgerDir)
-            ()
-          } catch { case e: Throwable =>
-            HarnessGuard.record(s"retire foreachBatch failed: $e")
-            throw e
-          }
-        }
-        .start()
-      q.awaitTermination()
+    st.drain("pipeline_retire_e2e") { hop =>
+      hop.fold(hop.source("takedowns", 1)) { delta =>
+        Lifecycle.delBatch(delta, 4)
+          .write.mode("append").parquet(st("ledger"))
+      }
     }
 
-    Lifecycle.indexAsOf(spark.read.parquet(indexDir),
-        spark.read.parquet(ledgerDir), asOfBatch = 4)
+    Lifecycle.indexAsOf(spark.read.parquet(st("sig_index")),
+        spark.read.parquet(st("ledger")), asOfBatch = 4)
       .orderBy(col("doc_id"))
   }
 
@@ -402,11 +383,7 @@ object Pipeline {
   def liveBarsE2E(spark: SparkSession, dir: String,
                   hourly: Boolean = false): DataFrame = {
     import graft.operators.{Bronze, Gold, Silver}
-    val basePath = Files.createTempDirectory("graft_le2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val silverDir = s"$base/silver"
-    val goldDir = s"$base/gold"
+    val st = new Staging(spark, "graft_le2e_")
 
     // the LIVE TAIL only — the last 6 h of event time, cut on a minute
     // boundary so bars-from-filtered-trades ≡ full bars with
@@ -423,21 +400,17 @@ object Pipeline {
     val cutMs = (maxTs.getTime / 60000L) * 60000L - 6L * 3600 * 1000
     val cut = new java.sql.Timestamp(cutMs)
     val silverBatch = full.filter(col("event_time") >= lit(cut))
-    silverBatch.write.mode("overwrite").parquet(silverDir)
+    silverBatch.write.mode("overwrite").parquet(st("silver"))
 
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try HarnessGuard.scope(spark, "bars_live_e2e") {
-      val q =
-        if (hourly) Streams.silverToGoldLiveHourly(spark, silverDir,
-          goldDir, s"$base/ck", trigger = Trigger.AvailableNow())
-        else Streams.silverToGoldLive(spark, silverDir, goldDir,
-          s"$base/ck", trigger = Trigger.AvailableNow())
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+    st.drain("bars_live_e2e", Some(8)) { hop =>
+      (if (hourly) Streams.silverToGoldLiveHourly(hop.spark, st("silver"),
+        st("gold"), st("ck"), trigger = an)
+      else Streams.silverToGoldLive(hop.spark, st("silver"), st("gold"),
+        st("ck"), trigger = an)).awaitTermination()
+    }
 
     val cols = Gold.bars(silverBatch).columns
-    spark.read.parquet(goldDir)
+    spark.read.parquet(st("gold"))
       .select(cols.head, cols.tail: _*)
       .orderBy(col("symbol"), col("bar_start"))
   }
@@ -460,89 +433,55 @@ object Pipeline {
   def sketchE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Sketches
     import graft.functions.TextFunctions.hash60
-    val basePath = Files.createTempDirectory("graft_se2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val kmvDir = s"$base/kmv_state"
-    val hllDir = s"$base/hll_state"
+    val st = new Staging(spark, "graft_se2e_")
     val k = 64
 
-    Tables.events(spark, dir).select(col("event_type"), col("user_id"))
-      .repartition(3).write.mode("overwrite").parquet(landing)
-
-    val inSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType)))
-    val kmvSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("h",
-        org.apache.spark.sql.types.LongType)))
-    val hllSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("idx",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("reg",
-        org.apache.spark.sql.types.IntegerType)))
+    // the rows each fold merges into its state dir; their schemas are
+    // the state tables' schemas
+    def hashes(d: DataFrame) = d.select(col("event_type"),
+      hash60(concat(lit("kmv_"), col("user_id"))).as("h"))
+    def registers(d: DataFrame) = Sketches.hllRegisters(d,
+        Seq("event_type"), col("user_id"), 8, "hll_")
+      .select(col("event_type"), col("idx"), col("reg").cast("int").as("reg"))
+    val events = Tables.events(spark, dir)
+      .select(col("event_type"), col("user_id"))
+    st.land(events.repartition(3), "landing")
+    val kmvSchema = hashes(events).schema
+    val hllSchema = registers(events).schema
     // the first fold reads EMPTY state dirs (schema given explicitly):
     // create them before the stream can fire its first batch
-    new java.io.File(kmvDir).mkdirs()
-    new java.io.File(hllDir).mkdirs()
-    // the whole start+drive runs INSIDE the guard scope (like every
-    // other e2e here): with AvailableNow the first micro-batch can
-    // fire before awaitTermination, and starting outside the scope
-    // would miss or mis-label its failures in a fresh JVM
-    HarnessGuard.scope(spark, "sketch_stream_e2e") {
-    val q = spark.readStream.schema(inSchema)
-      .option("maxFilesPerTrigger", 1).parquet(landing)
-      .writeStream
-      .option("checkpointLocation", s"$base/ck")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (delta: DataFrame, _: Long) =>
-        try {
-          // KMV fold: state ∪ delta hashes → k smallest per group.
-          // INVARIANT (both folds): the new state is read FROM its
-          // state dir and written back TO the same dir within this
-          // batch — the EAGER localCheckpoint(true) must materialize
-          // the fold BEFORE mode("overwrite") deletes the files it
-          // read; dropping the eager flag silently truncates state.
-          val dHashes = delta.select(col("event_type"),
-            hash60(concat(lit("kmv_"), col("user_id"))).as("h"))
-          val kmvState = spark.read.schema(kmvSchema).parquet(kmvDir)
-          Sketches.kmvStateFold(kmvState.unionByName(dHashes),
-              Seq("event_type"), k)
-            .localCheckpoint(true)
-            .write.mode("overwrite").parquet(kmvDir)
-          // HLL fold: register-wise max of state ∪ delta registers
-          // (same read-materialize-then-overwrite invariant as above)
-          val dRegs = Sketches.hllRegisters(delta, Seq("event_type"),
-            col("user_id"), 8, "hll_")
-            .select(col("event_type"), col("idx"), col("reg").cast("int")
-              .as("reg"))
-          val hllState = spark.read.schema(hllSchema).parquet(hllDir)
-          hllState.unionByName(dRegs)
-            .groupBy(col("event_type"), col("idx"))
-            .agg(max(col("reg")).as("reg"))
-            .localCheckpoint(true)
-            .write.mode("overwrite").parquet(hllDir)
-          ()
-        } catch { case e: Throwable =>
-          HarnessGuard.record(s"sketch foreachBatch failed: $e")
-          throw e
-        }
+    new java.io.File(st("kmv_state")).mkdirs()
+    new java.io.File(st("hll_state")).mkdirs()
+
+    st.drain("sketch_stream_e2e") { hop =>
+      hop.fold(hop.source("landing", 1)) { delta =>
+        // KMV fold: state ∪ delta hashes → k smallest per group.
+        // INVARIANT (both folds): the new state is read FROM its
+        // state dir and written back TO the same dir within this
+        // batch — the EAGER localCheckpoint(true) must materialize
+        // the fold BEFORE mode("overwrite") deletes the files it
+        // read; dropping the eager flag silently truncates state.
+        Sketches.kmvStateFold(
+            spark.read.schema(kmvSchema).parquet(st("kmv_state"))
+              .unionByName(hashes(delta)), Seq("event_type"), k)
+          .localCheckpoint(true)
+          .write.mode("overwrite").parquet(st("kmv_state"))
+        // HLL fold: register-wise max of state ∪ delta registers
+        // (same read-materialize-then-overwrite invariant as above)
+        spark.read.schema(hllSchema).parquet(st("hll_state"))
+          .unionByName(registers(delta))
+          .groupBy(col("event_type"), col("idx"))
+          .agg(max(col("reg")).as("reg"))
+          .localCheckpoint(true)
+          .write.mode("overwrite").parquet(st("hll_state"))
       }
-      .start()
-    q.awaitTermination()
     }
 
     val kmvEst = Sketches.kmvEstimateFromState(
-      spark.read.schema(kmvSchema).parquet(kmvDir), Seq("event_type"), k)
-    val hllEst = graft.operators.Sketches.hllReport(
-      spark.read.schema(hllSchema).parquet(hllDir)
+      spark.read.schema(kmvSchema).parquet(st("kmv_state")),
+      Seq("event_type"), k)
+    val hllEst = Sketches.hllReport(
+      spark.read.schema(hllSchema).parquet(st("hll_state"))
         .select(col("event_type"), col("idx"), col("reg")),
       Seq("event_type"), 8)
     kmvEst.join(hllEst, Seq("event_type"))
@@ -551,31 +490,6 @@ object Pipeline {
       .orderBy(col("event_type"))
   }
 
-  /** Stream-stream interval join, oracle-gated end to end: buys and
-    * sells land as REAL file streams (two sources into one streaming
-    * query), flow through [[Streams.matchOppositeSides]] with its
-    * event-time range condition, and the matched pairs stream into a
-    * parquet sink in append mode. The sink is read back and aggregated
-    * per buy — the exact `interval_buy_sells` result shape, so the
-    * `pipeline_join_e2e` CORRECTNESS entry hash-matches the batch
-    * interval-join oracle: the streaming join must produce precisely
-    * the pairs the banded batch join produces.
-    *
-    * The sell side lands as 2 files drained one per micro-batch
-    * (`maxFilesPerTrigger`), so the second batch joins against BUY
-    * STATE buffered in the first — real cross-batch stream-stream
-    * state at the minimum batch count that exercises it (a
-    * stream-stream join keeps FOUR state stores per shuffle partition,
-    * so batches × partitions is the fixed-cost product to keep small).
-    * The watermark is set wider than the corpus time-span, which makes
-    * the drain order-independent (no row is ever late, no state is
-    * evicted before its partner arrives) — completeness is what the
-    * oracle checks. Tight-watermark semantics (eviction, late drops,
-    * bounded state) are the COMPLEMENTARY property, covered by
-    * StreamingSpec's controlled multi-batch cases; at 100 TB the
-    * watermark is the knob that bounds join state, sized to the
-    * real-world disorder bound, not the corpus span.
-    */
   /** ER nightly-delta hop, oracle-gated end to end: the B-side delta
     * lands as a REAL file stream (2 files drained one per micro-batch
     * via `maxFilesPerTrigger` — real multi-batch execution), joins the
@@ -594,11 +508,7 @@ object Pipeline {
     */
   def erE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.EntityResolution
-    val basePath = Files.createTempDirectory("graft_ere2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val deltaDir = s"$base/delta"
-    val candDir = s"$base/cand"
+    val st = new Staging(spark, "graft_ere2e_")
 
     val c = Tables.customer(spark, dir)
     val a = EntityResolution.sourceA(c)
@@ -620,27 +530,16 @@ object Pipeline {
         s"exceeds MasterCap ${EntityResolution.MasterCap} — the batch " +
         "oracle's delta-local cap would bind and the streamed (uncapped " +
         "rowwise) leg would diverge; shrink the delta split or raise the cap")
-    bDelta.repartition(2).write.mode("overwrite").parquet(deltaDir)
+    st.land(bDelta.repartition(2), "delta")
     val masterIdx = EntityResolution.masterIndex(a).localCheckpoint(true)
 
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try HarnessGuard.scope(spark, "pipeline_er_e2e") {
-      val dStream = spark.readStream.schema(bDelta.schema)
-        .option("maxFilesPerTrigger", 1).parquet(deltaDir)
-      val q = Streams.erCandidateStream(dStream, masterIdx)
-        .writeStream
-        .format("parquet")
-        .option("path", candDir)
-        .option("checkpointLocation", s"$base/ck")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+    st.drain("pipeline_er_e2e", Some(4)) { hop =>
+      hop.toParquet(
+        Streams.erCandidateStream(hop.source("delta", 1), masterIdx), "cand")
+    }
 
     EntityResolution.scoreDeltaCandidates(
-        spark.read.parquet(candDir).distinct(), a, bDelta, bHist)
+        st.read("cand").distinct(), a, bDelta, bHist)
       .orderBy(col("a_id"), col("b_id"))
   }
 
@@ -671,16 +570,7 @@ object Pipeline {
     */
   def splitE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val basePath = Files.createTempDirectory("graft_se2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val postDir = s"$base/hist_postings"
-    val cappedDir = s"$base/hist_capped"
-    val assignDir = s"$base/hist_assign"
-    val splitDir = s"$base/hist_split"
-    val deltaPostDir = s"$base/delta_postings"
-    val candDir = s"$base/cand"
+    val st = new Staging(spark, "graft_se2e_")
 
     val docs = Tables.documents(spark, dir)
     val isHist = pmod(graft.functions.TextFunctions.hash60(
@@ -690,49 +580,29 @@ object Pipeline {
     // the "nightly" state, persisted once: shingle postings (history
     // text is never re-read), the df-capped join side, the cluster
     // assignment (derived FROM the persisted postings), and the split
-    Dedup.shingled(hist).write.mode("overwrite").parquet(postDir)
-    val histPostings = spark.read.parquet(postDir)
+    Dedup.shingled(hist).write.mode("overwrite").parquet(st("hist_postings"))
+    val histPostings = spark.read.parquet(st("hist_postings"))
     Dedup.cappedPostings(histPostings)
-      .write.mode("overwrite").parquet(cappedDir)
+      .write.mode("overwrite").parquet(st("hist_capped"))
     Dedup.clusters(Dedup.ngramJaccardPairsFromPostings(histPostings))
-      .write.mode("overwrite").parquet(assignDir)
-    val histAssign = spark.read.parquet(assignDir)
+      .write.mode("overwrite").parquet(st("hist_assign"))
+    val histAssign = spark.read.parquet(st("hist_assign"))
     Dedup.clusterSafeSplitFromAssign(hist, histAssign)
-      .write.mode("overwrite").parquet(splitDir)
-    delta.repartition(2).write.mode("overwrite").parquet(landing)
+      .write.mode("overwrite").parquet(st("hist_split"))
+    st.land(delta.repartition(2), "landing")
 
-    val an = Trigger.AvailableNow()
-    val inSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
-    val postSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("shingle",
-        org.apache.spark.sql.types.LongType)))
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try HarnessGuard.scope(spark, "pipeline_split_e2e") {
+    st.drain("pipeline_split_e2e", Some(4)) { hop =>
       // hop 1: landing docs -> delta shingle postings (index append)
-      Streams.parquetSink(
-        Dedup.shingled(spark.readStream.schema(inSchema)
-          .option("maxFilesPerTrigger", 1).parquet(landing)),
-        deltaPostDir, s"$base/ck1", trigger = an)
-        .start().awaitTermination()
+      hop.toParquet(Dedup.shingled(hop.source("landing", 1)),
+        "delta_postings")
       // hop 2: landed postings -> stream-static co-shingle hits
       // against the persisted capped history postings
-      Streams.parquetSink(
-        Streams.splitCandidateStream(
-          spark.readStream.schema(postSchema)
-            .option("maxFilesPerTrigger", 2).parquet(deltaPostDir),
-          spark.read.parquet(cappedDir)),
-        candDir, s"$base/ck2", trigger = an)
-        .start().awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+      hop.toParquet(Streams.splitCandidateStream(
+        hop.source("delta_postings", 2),
+        spark.read.parquet(st("hist_capped"))), "cand")
+    }
 
-    val deltaPost = spark.read.schema(postSchema).parquet(deltaPostDir)
+    val deltaPost = st.read("delta_postings")
     // landed-state gates (1-row folds): the streamed index must carry
     // exactly the delta's shingle multiset, and retrieval must have
     // fired (the fixture's delta always shares shingles with history)
@@ -751,17 +621,10 @@ object Pipeline {
       "split e2e ingest drift: landed postings differ from a direct " +
         "shingle pass over the delta at equal cardinality " +
         "(compensating drift)")
-    require(!spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("delta_doc",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("hist_doc",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("shingle",
-          org.apache.spark.sql.types.LongType))))
-      .parquet(candDir).isEmpty,
+    require(!st.read("cand").isEmpty,
       "split e2e retrieval landed zero co-shingle hits")
     Dedup.clusterSafeSplitIncrementalFromPostings(
-      histPostings, histAssign, spark.read.parquet(splitDir),
+      histPostings, histAssign, spark.read.parquet(st("hist_split")),
       deltaPost, delta.select(col("doc_id")))
   }
 
@@ -790,11 +653,7 @@ object Pipeline {
     */
   def btE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Learn
-    val basePath = Files.createTempDirectory("graft_bte2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val landing = s"$base/landing"
-    val cmpDir = s"$base/cmp"
+    val st = new Staging(spark, "graft_bte2e_")
 
     val ev = Tables.events(spark, dir).select(col("event_id"), col("ts"),
       col("user_id"), col("event_type"), col("value"))
@@ -812,31 +671,18 @@ object Pipeline {
     val bnds = delta.agg(min(unix_micros(col("ts"))).as("lo"),
       max(unix_micros(col("ts"))).as("hi")).head()
     val midUs = bnds.getLong(0) / 2 + bnds.getLong(1) / 2
-    delta.filter(unix_micros(col("ts")) <= midUs)
-      .coalesce(1).write.mode("overwrite").parquet(landing)
+    st.land(delta.filter(unix_micros(col("ts")) <= midUs).coalesce(1),
+      "landing")
     Thread.sleep(20) // distinct mtimes -> deterministic oldest-first
-    delta.filter(unix_micros(col("ts")) > midUs)
-      .coalesce(1).write.mode("append").parquet(landing)
+    st.land(delta.filter(unix_micros(col("ts")) > midUs).coalesce(1),
+      "landing", mode = "append")
 
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try HarnessGuard.scope(spark, "pipeline_bt_e2e") {
-      val dStream = spark.readStream.schema(delta.schema)
-        .option("maxFilesPerTrigger", 1).parquet(landing)
-      Streams.parquetSink(
-          Streams.btComparisonStream(spark, dStream, carry).toDF(),
-          cmpDir, s"$base/ck", trigger = Trigger.AvailableNow())
-        .start().awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+    st.drain("pipeline_bt_e2e", Some(8)) { hop =>
+      hop.toParquet(Streams.btComparisonStream(hop.spark,
+        hop.source("landing", 1), carry).toDF(), "cmp")
+    }
 
-    val cmpSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("winner",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("loser",
-        org.apache.spark.sql.types.StringType)))
-    val landed = spark.read.schema(cmpSchema).parquet(cmpDir)
+    val landed = st.read("cmp")
     val landedWU = landed
       .groupBy(col("user_id"), col("winner"), col("loser"))
       .agg(count(lit(1)).as("nw"))
@@ -859,14 +705,34 @@ object Pipeline {
         .agg(sum(col("nw")).as("nw")))
   }
 
+  /** Stream-stream interval join, oracle-gated end to end: buys and
+    * sells land as REAL file streams (two sources into one streaming
+    * query), flow through [[Streams.matchOppositeSides]] with its
+    * event-time range condition, and the matched pairs stream into a
+    * parquet sink in append mode. The sink is read back and aggregated
+    * per buy — the exact `interval_buy_sells` result shape, so the
+    * `pipeline_join_e2e` CORRECTNESS entry hash-matches the batch
+    * interval-join oracle: the streaming join must produce precisely
+    * the pairs the banded batch join produces.
+    *
+    * The sell side lands as 2 files drained one per micro-batch
+    * (`maxFilesPerTrigger`), so the second batch joins against BUY
+    * STATE buffered in the first — real cross-batch stream-stream
+    * state at the minimum batch count that exercises it (a
+    * stream-stream join keeps FOUR state stores per shuffle partition,
+    * so batches × partitions is the fixed-cost product to keep small).
+    * The watermark is set wider than the corpus time-span, which makes
+    * the drain order-independent (no row is ever late, no state is
+    * evicted before its partner arrives) — completeness is what the
+    * oracle checks. Tight-watermark semantics (eviction, late drops,
+    * bounded state) are the COMPLEMENTARY property, covered by
+    * StreamingSpec's controlled multi-batch cases; at 100 TB the
+    * watermark is the knob that bounds join state, sized to the
+    * real-world disorder bound, not the corpus span.
+    */
   def joinE2E(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Trades
-    val basePath = Files.createTempDirectory("graft_je2e_")
-    val base = basePath.toString
-    stagingDirs.add(basePath)
-    val buysDir = s"$base/buys"
-    val sellsDir = s"$base/sells"
-    val pairsDir = s"$base/pairs"
+    val st = new Staging(spark, "graft_je2e_")
 
     val trades = Trades.fromEvents(Tables.events(spark, dir))
     val buys = trades.filter(col("side") === "buy")
@@ -874,29 +740,17 @@ object Pipeline {
         col("price"), col("size"))
     val sells = trades.filter(col("side") === "sell")
       .select(col("symbol"), col("event_time"), col("price"), col("size"))
-    buys.coalesce(1).write.mode("overwrite").parquet(buysDir)
-    sells.repartition(2).write.mode("overwrite").parquet(sellsDir)
+    st.land(buys.coalesce(1), "buys")
+    st.land(sells.repartition(2), "sells")
 
-    val origShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try HarnessGuard.scope(spark, "pipeline_join_e2e") {
-      val bStream = spark.readStream.schema(buys.schema).parquet(buysDir)
-      val sStream = spark.readStream.schema(sells.schema)
-        .option("maxFilesPerTrigger", 1).parquet(sellsDir)
-      val joined = Streams.matchOppositeSides(bStream, sStream,
+    st.drain("pipeline_join_e2e", Some(4)) { hop =>
+      hop.toParquet(Streams.matchOppositeSides(
+        hop.source("buys"), hop.source("sells", 1),
         within = "1 minute", watermark = "45 days",
-        joinType = "inner", buyKeys = Seq("event_id"))
-      val q = joined.writeStream
-        .format("parquet")
-        .option("path", pairsDir)
-        .option("checkpointLocation", s"$base/ck")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", origShuffle)
+        joinType = "inner", buyKeys = Seq("event_id")), "pairs")
+    }
 
-    spark.read.parquet(pairsDir)
+    st.read("pairs")
       .groupBy(col("symbol"), col("event_id"), col("buy_time"),
         col("buy_price"))
       .agg(count(lit(1)).as("n_sells"),

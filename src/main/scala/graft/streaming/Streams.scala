@@ -60,17 +60,6 @@ object Streams {
     */
   val HandoffTrigger: Trigger = Trigger.ProcessingTime("1 second")
 
-  /** Streaming commit tuning (T8, reference kafka_to_bronze_trades.py:
-    * 38-40): manifest-based exactly-once file commits + short metadata
-    * retention for fast local commits. Call once per session before
-    * starting file-sink queries.
-    */
-  def applyCommitTuning(spark: SparkSession): Unit = {
-    spark.conf.set("spark.sql.streaming.commitProtocolClass",
-      "org.apache.spark.sql.execution.streaming.ManifestFileCommitProtocol")
-    spark.conf.set("spark.sql.streaming.minBatchesToRetain", "2")
-  }
-
   // ---- sources (S2: schema-required parquet file streams) ----
 
   def bronzeStream(spark: SparkSession, dir: String,
@@ -97,17 +86,6 @@ object Streams {
                      watermark: String = DefaultWatermark): DataFrame =
     silver.withWatermark("event_time", watermark)
       .dropDuplicates(Silver.dedupKeys)
-
-  /** Spark 4 variant: `dropDuplicatesWithinWatermark` guarantees dedup
-    * for duplicates arriving within the watermark delay OF EACH OTHER
-    * even when their event times differ (clock-skewed producers) — the
-    * robust choice for at-least-once upstreams. The reference uses plain
-    * dropDuplicates (exact-key state until watermark); both are exposed.
-    */
-  def dedupStreamingWithinWatermark(silver: DataFrame,
-                                    watermark: String = DefaultWatermark): DataFrame =
-    silver.withWatermark("event_time", watermark)
-      .dropDuplicatesWithinWatermark(Silver.dedupKeys)
 
   /** Streaming OHLCV bars: same aggregation expressions as the batch
     * Gold.bars, preceded by a watermark (silver_to_gold_bars.py:34-49).
@@ -524,6 +502,15 @@ object Streams {
       goldDir, checkpoint, partitionCols = partitionCols,
       trigger = trigger).start()
 
+  /** Runs one micro-batch's sink work; a failure is recorded with
+    * [[HarnessGuard]] (Spark may retry it out of sight), then rethrown.
+    */
+  private[graft] def recorded[T](what: String)(f: => T): T =
+    try f catch { case e: Throwable =>
+      HarnessGuard.record(s"$what failed: $e")
+      throw e
+    }
+
   /** True iff `e` is the missing/empty-sink analysis error a FIRST
     * micro-batch legitimately hits reading its own output dir back:
     * the path doesn't exist yet, or exists with no parquet footers to
@@ -584,14 +571,10 @@ object Streams {
         // materialize the merge before the dynamic overwrite deletes
         // the hour dirs it read.
         val merged = existing.unionByName(b).localCheckpoint(true)
-        try merged.write.mode("overwrite")
-          .partitionBy("bar_date", "bar_hour")
+        recorded("live-bars hourly upsert batch")(merged.write
+          .mode("overwrite").partitionBy("bar_date", "bar_hour")
           .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "snappy").parquet(goldDir)
-        catch { case e: Throwable =>
-          HarnessGuard.record(s"live-bars hourly upsert batch failed: $e")
-          throw e
-        }
+          .option("compression", "snappy").parquet(goldDir))
       }
       .start()
   }
@@ -618,14 +601,10 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        try batch.write.mode("overwrite")
+        recorded("live-bars upsert batch")(batch.write.mode("overwrite")
           .partitionBy("bar_date", "symbol", "bar_start")
           .option("partitionOverwriteMode", "dynamic")
-          .option("compression", "snappy").parquet(goldDir)
-        catch { case e: Throwable =>
-          HarnessGuard.record(s"live-bars upsert batch failed: $e")
-          throw e
-        }
+          .option("compression", "snappy").parquet(goldDir))
       }
       .start()
   }

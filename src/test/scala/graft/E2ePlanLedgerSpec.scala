@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -51,18 +55,61 @@ class E2ePlanLedgerSpec extends SparkSpec {
         if (n == last) stable += 1 else { stable = 0; last = n }
       }
     }
+    // the caller's conf must stay put while a pipeline runs (its hops
+    // take their partition count from a cloned session): a second
+    // thread polls it every 5 ms and keeps every other value it sees
+    val shuffleKey = "spark.sql.shuffle.partitions"
+    val callerShuffle = spark.conf.get(shuffleKey)
+    val confDrift =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    @volatile var running = ""
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) {
+      val v = spark.conf.get(shuffleKey)
+      if (v != callerShuffle) confDrift.add((running, v))
+      Thread.sleep(5)
+    })
+    poller.setDaemon(true)
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
+    def goldTrees() = Files.list(tmp).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("graft_e2e_")).toSet
+    var goldTree = Set.empty[java.nio.file.Path]
     spark.listenerManager.register(listener)
+    poller.start()
     val perQuery = try {
       e2eNames.map { n =>
         val before = captured.size
+        val treesBefore = goldTrees()
+        running = n
         // constructing an e2e entry RUNS its streams; the returned
         // frame is the sink-side fold — count() executes that too
         SparkEntry.queries(n)(spark, dir).count()
+        running = ""
+        if (n == "pipeline_gold_e2e") goldTree = goldTrees() -- treesBefore
         flush()
         n -> captured.toArray(Array.empty[(String, QueryExecution)])
           .drop(before).map(_._2).toSeq
       }
-    } finally spark.listenerManager.unregister(listener)
+    } finally {
+      spark.listenerManager.unregister(listener)
+      polling = false
+      poller.join()
+    }
+
+    val changed = confDrift.asScala.toSeq.distinct
+    assert(changed.isEmpty, s"the caller's $shuffleKey ($callerShuffle) " +
+      s"changed while e2e pipelines ran: $changed")
+    // ... while each gold hop still ran with its 8 partitions: the
+    // offset log of the hop's first batch records the count
+    assert(goldTree.size == 1, s"expected one new gold staging tree: $goldTree")
+    val offsets = goldTree.toSeq.flatMap(t => Files.walk(t).iterator().asScala
+      .filter(_.endsWith(Paths.get("offsets", "0"))).toSeq)
+    assert(offsets.size == 3, s"expected 3 gold hop offset logs: $offsets")
+    offsets.foreach { o =>
+      val log = new String(Files.readAllBytes(o), "UTF-8")
+      assert(log.contains(s"\"$shuffleKey\":\"8\""),
+        s"$o does not record $shuffleKey=8:\n$log")
+    }
 
     // every e2e must actually have fired batch executions (an empty
     // capture would mean the sweep silently swept nothing)

@@ -494,22 +494,6 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dropDuplicatesWithinWatermark also suppresses in-window duplicates") {
-    implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Trade]
-    val q = Streams.dedupStreamingWithinWatermark(in.toDF)
-      .writeStream.format("memory").queryName("dedup_ww").outputMode("append")
-      .start()
-    try {
-      val t0 = trade("BTC", "2024-01-01 10:00:10", 100.0)
-      in.addData(t0, t0)
-      q.processAllAvailable()
-      in.addData(t0)
-      q.processAllAvailable()
-      assert(spark.table("dedup_ww").count() == 1)
-    } finally q.stop()
-  }
-
   test("stream-stream interval join matches within the time bound only") {
     implicit val ctx = spark.sqlContext
     val buys = MemoryStream[Trade]
