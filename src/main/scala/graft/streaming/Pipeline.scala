@@ -30,14 +30,12 @@ import graft.operators.Bronze
   *  2. batch-written inputs in that tree: landing files and nightly
   *     state, on the caller's session;
   *  3. the hops, each drained to completion (AvailableNow), inside one
-  *     [[HarnessGuard.scope]], started from a CLONE of the caller's
-  *     session that carries the hop shuffle-partition count. The
-  *     caller's conf never changes; each hop's offset log records the
-  *     count it ran with. Batch work inside a fold (state reads) and
-  *     the static side of a stream-static join stay on the caller's
-  *     session: a clone has its own class loader, so batch plans run on
-  *     it miss the generated-code cache (27 recompiles, +1.2 s per
-  *     restateE2E call at sf0.1);
+  *     [[HarnessGuard.scope]]. A pipeline that sizes its hops' shuffle
+  *     partitions starts them from a [[HopSession]]: a clone of the
+  *     caller's session carrying that count, made once per caller and
+  *     count. The caller's conf never changes; each hop's offset log
+  *     records the count it ran with. The other pipelines start their
+  *     hops from the caller's session;
   *  4. a batch read-back on the caller's session. Every dir remembers
   *     the schema of the frame that wrote it, so sources and read-backs
   *     spell no schema out, and an empty sink reads back empty instead
@@ -101,15 +99,17 @@ object Pipeline {
       spark.read.schema(schemas(name)).parquet(this(name))
 
     /** Runs `hops` inside `label`'s guard scope on the hop session:
-      * `partitions` shuffle partitions, or the caller's count if None.
+      * `partitions` shuffle partitions, or the caller's session if None.
       */
     def drain(label: String, partitions: Option[Int] = None)(
         hops: Hops => Unit): Unit = {
-      val hop = new Hops(HopSession(spark, partitions))
+      val hop = new Hops(partitions.fold(spark)(HopSession(spark, _)))
       HarnessGuard.scope(spark, label)(hops(hop))
     }
 
-    /** The hop verbs on the hop session `spark`; each drains to the end. */
+    /** The hop verbs on the hop session `spark` (which the `Streams`
+      * hops that build their own stream take); each drains to the end.
+      */
     final class Hops(val spark: SparkSession) {
       /** A file stream over `name`; `maxFiles` > 0 caps files per batch. */
       def source(name: String, maxFiles: Int = 0): DataFrame = {

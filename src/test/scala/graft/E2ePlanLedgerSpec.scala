@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.HopSession
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The plan-ledger gates extended to the nine e2e pipelines (the
@@ -110,6 +111,24 @@ class E2ePlanLedgerSpec extends SparkSpec {
       assert(log.contains(s"\"$shuffleKey\":\"8\""),
         s"$o does not record $shuffleKey=8:\n$log")
     }
+
+    // a second pass reuses the hop sessions of the first: every session
+    // that runs a stream leaves a listener bus on the SparkContext for
+    // good, so a clone per call would add one bus per pipeline per
+    // pass. The only growth allowed is Spark's own: each stateful
+    // query runs on a per-run clone of its session, and the stateful
+    // operators' state-store lookup leaves that clone's bus behind —
+    // one per stateful hop (gold: dedup + bars; join: the stream-stream
+    // join; bars_live: update-mode bars; bt: the comparison machine)
+    val busesAllowed = Map("pipeline_gold_e2e" -> 2,
+      "pipeline_join_e2e" -> 1, "bars_live_e2e" -> 1, "pipeline_bt_e2e" -> 1)
+    val busesFound = e2eNames.map { n =>
+      val before = HopSession.streamingListenerBuses(spark)
+      SparkEntry.queries(n)(spark, dir).count()
+      n -> (HopSession.streamingListenerBuses(spark) - before)
+    }.filter(_._2 != 0).toMap
+    assert(busesFound == busesAllowed, s"streaming listener buses added " +
+      s"per e2e call on a second pass: $busesFound, allowed $busesAllowed")
 
     // every e2e must actually have fired batch executions (an empty
     // capture would mean the sweep silently swept nothing)
