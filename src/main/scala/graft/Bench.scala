@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry point (driver contract): times every SparkEntry query
   * on SPARK_GRAFT_SF_DIR and emits ONE machine-parseable JSON line.
   *
@@ -60,15 +58,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // registry-sized generated-class cache (the round-8 lesson:
-      // the 100-entry default thrashes past ~100 distinct plans)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
-      .getOrCreate()
+    val spark = GraftSession.harness().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // counted suppression of the ONE named-benign ERROR stack (the
     // accumulator-GC DAGScheduler event — see BenignLogGuard): the
@@ -81,10 +71,6 @@ object Bench {
     // swing 2-4x with host noise; min-of-N is standard practice). The
     // end-to-end pipelines are IO-bound (they materialize real sinks +
     // checkpoints), so re-running them buys no timing stability — once.
-    val singleRun = Set("pipeline_gold_e2e", "pipeline_corpus_e2e",
-      "pipeline_restate_e2e", "pipeline_join_e2e", "pipeline_retire_e2e",
-      "pipeline_er_e2e", "pipeline_split_e2e",
-      "sketch_stream_e2e", "bars_live_e2e")
     // name-sorted: Map hash order reshuffles whenever the registry grows,
     // which silently changes each query's warmup context round-over-round
     // and confounds cross-round per-query comparison
@@ -99,7 +85,7 @@ object Bench {
     flushedDrain() // clear warmup noise
     val results: Seq[(String, Either[String, (Double, Double)])] =
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-        val nRuns = if (singleRun(name)) 1 else 2
+        val nRuns = if (SparkEntry.e2eNames(name)) 1 else 2
         val runs: Seq[Either[String, Double]] = (1 to nRuns).map { _ =>
           val t0 = System.nanoTime()
           try {

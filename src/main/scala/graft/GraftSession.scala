@@ -35,6 +35,21 @@ object GraftSession {
       // (SCALING.md). Static conf: must be set before the session.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
 
+  /** The measured session: the conf every harness main (Bench, Verify,
+    * Replicate, Measure) and the specs run on. No extensions and no AQE
+    * overrides, so the plans it times are the plans Verify checks.
+    * `cpus` defaults to `SPARK_GRAFT_CPUS`, else 4.
+    */
+  def harness(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt))
+      : SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      // registry-sized generated-class cache, as in `builder`
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+
   /** Build (or reuse) and finish wiring an existing session. */
   def getOrCreate(master: String = "local[*]"): SparkSession = {
     val spark = builder(master).getOrCreate()

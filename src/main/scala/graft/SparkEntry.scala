@@ -318,6 +318,12 @@ object SparkEntry {
          |          start_tok + span_len - 1), ' ') AS span_text
          |      FROM cl)""".stripMargin
 
+  /** The streaming e2e pipelines: the registry names ending `_e2e`.
+    * Building one runs real streams, so the timing loops run each once
+    * and the constructed-plan sweeps skip them.
+    */
+  lazy val e2eNames: Set[String] = queries.keySet.filter(_.endsWith("_e2e"))
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "gold_bars_1m" -> ((s, dir) => goldBars(s, dir)),
@@ -1196,8 +1202,8 @@ object SparkEntry {
     // in exact 1e-6 integer units (the lsh_recall_audit discipline).
     "shapley_trunc_fidelity" -> ((s, dir) =>
       Valuation.shapleyTruncFidelity(Tables.embeddings(s, dir))),
-    // the truncation-rank knob as an oracle-verified curve (ShapKnob
-    // is the wide dev sweep): fidelity rows at R = 16 and 64.
+    // the truncation-rank knob as an oracle-verified curve (`Measure
+    // sweep shap` is the wide dev sweep): fidelity rows at R = 16 and 64.
     "shapley_r_curve" -> ((s, dir) =>
       Valuation.shapleyRCurve(Tables.embeddings(s, dir))),
     // incremental twin: delta train points merged with the persisted

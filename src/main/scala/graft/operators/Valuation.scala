@@ -295,7 +295,7 @@ object Valuation {
   }
 
   /** The truncation-rank knob as an ORACLE-VERIFIED curve (the
-    * unigram_prune_curve discipline; `graft.ShapKnob` is the wide dev
+    * unigram_prune_curve discipline; `graft.Measure sweep shap` is the wide dev
     * sweep): [[shapleyTruncFidelity]] rows at each rank, stacked with
     * the rank as a column — per (R, label), top-R coverage and the
     * max/mean |exact − truncated| envelope, so the R a deployment

@@ -61,7 +61,7 @@ object Pipeline {
     * the gold sink lazily, so each invocation's dirs must outlive the
     * call — but ONE shared shutdown hook reclaims all of them (a hook
     * per invocation would accumulate hook registrations across repeated
-    * runs in one process, e.g. graft.Time or test reruns).
+    * runs in one process, e.g. `graft.Measure time` or test reruns).
     */
   private val stagingDirs =
     java.util.Collections.synchronizedList(

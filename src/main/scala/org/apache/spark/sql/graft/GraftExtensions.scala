@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL surface for the engine's custom Catalyst expressions.
   *
-  * Registered via the standard extension point:
+  * Registered on any `SparkSession.Builder` via the standard extension
+  * point (`graft.GraftSession.builder` does the first):
   * {{{
-  * SparkSession.builder()
+  * builder
   *   .withExtensions(new GraftExtensions)          // or
   *   .config("spark.sql.extensions", "org.apache.spark.sql.graft.GraftExtensions")
   * }}}

@@ -63,10 +63,9 @@ class ContractSpec extends AnyFunSuite {
     // adding a new collect means consciously updating this ledger
     // with the same proof.
     val allowed = Map(
-      "graft/CodegenAudit.scala" -> 1, // dev tool: plan-string probe
-      "graft/BitextKnob.scala" -> 1, // dev tool: 1-row audit summary
-      "graft/ErKnob.scala" -> 1, // dev tool: 1-row eval-threshold row
-      "graft/ShapKnob.scala" -> 1, // dev tool: 1-row fidelity fold
+      // dev tool: the codegen audit's plan-executing probe and the
+      // sweep printer's one-row knob frame
+      "graft/Measure.scala" -> 2,
       "graft/operators/Backtest.scala" -> 2, // 1-row moment folds
       // 1-row/model-sized GD folds + btIncremental's limit(3)-bounded
       // carry-contract diagnostic sample
@@ -88,6 +87,13 @@ class ContractSpec extends AnyFunSuite {
     assert(found == allowed,
       s"driver collect() ledger drifted.\n  found:   $found\n" +
       s"  allowed: $allowed\nEvery new site needs a bounded-size proof here.")
+  }
+
+  test("the e2e name set is exactly the ten streaming pipelines") {
+    assert(SparkEntry.e2eNames == Set("pipeline_gold_e2e",
+      "pipeline_corpus_e2e", "pipeline_restate_e2e", "pipeline_retire_e2e",
+      "pipeline_join_e2e", "pipeline_er_e2e", "pipeline_split_e2e",
+      "pipeline_bt_e2e", "sketch_stream_e2e", "bars_live_e2e"))
   }
 
   test("oracle SQL carries no tabs or CRs (driver JSON-escape contract)") {

@@ -27,10 +27,7 @@ class E2ePlanLedgerSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private val e2eNames = Seq("pipeline_gold_e2e", "pipeline_corpus_e2e",
-    "pipeline_restate_e2e", "pipeline_retire_e2e", "pipeline_join_e2e",
-    "pipeline_er_e2e", "pipeline_split_e2e", "sketch_stream_e2e",
-    "bars_live_e2e", "pipeline_bt_e2e")
+  private val e2eNames = SparkEntry.e2eNames.toSeq.sorted
 
   test("e2e pipelines: every executed batch subplan passes the BNLJ " +
       "and unpartitioned-window sweeps") {

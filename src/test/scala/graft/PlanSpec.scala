@@ -608,11 +608,7 @@ class PlanSpec extends SparkSpec {
     // so they can't be swept here — E2ePlanLedgerSpec runs the SAME
     // gate over their executed batch subplans via a
     // QueryExecutionListener
-    val names = SparkEntry.queries.keys
-      .filterNot(Set("pipeline_gold_e2e", "pipeline_corpus_e2e",
-        "pipeline_restate_e2e", "pipeline_retire_e2e", "pipeline_join_e2e",
-        "pipeline_er_e2e", "pipeline_split_e2e", "sketch_stream_e2e",
-        "bars_live_e2e", "pipeline_bt_e2e"))
+    val names = SparkEntry.queries.keys.filterNot(SparkEntry.e2eNames)
     val offenders = names.filter { n =>
       val p = plan(n)
       (p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct")) &&
@@ -686,11 +682,7 @@ class PlanSpec extends SparkSpec {
       "attribution_last_touch" -> 1)
     // e2e queries launch streams at construction; their executed batch
     // subplans get this same sweep in E2ePlanLedgerSpec
-    val names = SparkEntry.queries.keys
-      .filterNot(Set("pipeline_gold_e2e", "pipeline_corpus_e2e",
-        "pipeline_restate_e2e", "pipeline_retire_e2e", "pipeline_join_e2e",
-        "pipeline_er_e2e", "pipeline_split_e2e", "sketch_stream_e2e",
-        "bars_live_e2e", "pipeline_bt_e2e"))
+    val names = SparkEntry.queries.keys.filterNot(SparkEntry.e2eNames)
     val found = names.flatMap { n =>
       val c = SparkEntry.queries(n)(spark, dir).queryExecution.optimizedPlan
         .collect {

@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM-wide session — Spark
-  * startup dominates test wall-time otherwise).
+  * startup dominates test wall-time otherwise): the harness session
+  * Bench and Verify run on, at 4 cores.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.harness(4).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

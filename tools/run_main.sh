@@ -2,7 +2,7 @@
 # Dev runner: launch a graft entry point from the packaged jar without sbt
 # (same JVM flags as build.sbt's javaOptions). Keeps sbt free for compiles
 # and lets measurement runs proceed in parallel with test runs.
-# Usage: tools/run_main.sh graft.Time /root/testdata/sf0.1 query1 query2 ...
+# Usage: tools/run_main.sh graft.Measure time /root/testdata/sf0.1 query1 query2 ...
 # Refresh the jar first with: sbt package
 set -e
 JAR="$(dirname "$0")/../target/scala-2.13/cryptostreaminglakehousespark_2.13-0.1.0.jar"
