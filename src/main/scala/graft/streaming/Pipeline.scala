@@ -6,7 +6,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.HopSession
+import org.apache.spark.sql.graft.{HopSession, ParquetSinkQuery}
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -121,8 +121,8 @@ object Pipeline {
       /** Drains `df` into the append parquet sink `name`. */
       def toParquet(df: DataFrame, name: String): Unit = {
         schemas(name) = df.schema
-        Streams.parquetSink(df, Staging.this(name), Staging.this(s"ck_$name"),
-          trigger = an).start().awaitTermination()
+        ParquetSinkQuery.start(df, Staging.this(name), Staging.this(s"ck_$name"),
+          trigger = an).awaitTermination()
       }
 
       /** Drains `src`, handing each micro-batch to `f`. */

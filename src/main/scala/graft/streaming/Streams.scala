@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.graft.ParquetSinkQuery
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
 import graft.Schemas
@@ -34,29 +35,37 @@ import graft.operators.{Bronze, Dedup, Gold, Silver}
   *    and keeps the reference's 5 s ingest clock ([[DefaultTrigger]]):
   *    that interval sizes its batches and file count.
   *  - The hops that read ANOTHER HOP's sink ([[bronzeToSilver]],
-  *    [[silverToGold]]) are commit-driven ([[HandoffTrigger]]): they
-  *    poll their upstream's sink log every second, so each picks up an
-  *    upstream commit within ≤1 s, and the gold hop's append-mode flush
-  *    batch runs ≤1 s after the batch that advanced its watermark. On
-  *    one shared 5 s grid all three hops fire on the same instant, so
-  *    hop 2 lists bronze BEFORE hop 1's batch of that tick commits and
-  *    every handoff sits out a whole tick (measured pickups 3.0–4.5 s).
+  *    [[silverToGold]]) are commit-woken: their trigger clock
+  *    ([[org.apache.spark.sql.graft.HandoffClock]]) ends the wait for
+  *    the next trigger as soon as the upstream sink's log or the hop's
+  *    own commit log gains an entry. So each picks up an upstream commit
+  *    within milliseconds, and the gold hop's append-mode flush batch
+  *    starts right after the batch that advanced its watermark. The 1 s
+  *    [[HandoffTrigger]] is only the fallback: a wait with no new entry
+  *    (or on a path that is not on local disk) ends on its 1 s grid.
+  *    On one shared 5 s grid all three hops fire on the same instant,
+  *    so hop 2 lists bronze BEFORE hop 1's batch of that tick commits
+  *    and every handoff sits out a whole tick (measured pickups
+  *    3.0–4.5 s).
   *  Event→gold freshness is thus bounded by bar_end + watermark + ≤1
-  *  ingest tick + two ≤1 s handoffs + the three batch times.
+  *  ingest tick + the three batch times (each handoff starts at the
+  *  upstream commit).
   *  AvailableNow callers (the e2e pipelines, tests) pass their trigger
-  *  explicitly and are unaffected.
+  *  explicitly and are unaffected: AvailableNow never waits on a clock.
   */
 object Streams {
 
   val DefaultWatermark = "2 minutes"
   /** The ingest clock: reference kafka_to_bronze_trades.py:22. */
   val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
-  /** The commit-driven handoff poll for hops fed by another hop's sink.
-    * 1 s bounds the pickup delay at ≤1 s for ~0.02 cores more idle CPU
-    * (each idle poll re-reads the upstream sink log; three idle hops
-    * measured 0.027 cores against 0.011 on the 5 s clock).
-    * `ProcessingTime(0)` is a busy poll: ~0.65 cores idle for under 1 s
-    * more freshness.
+  /** The fallback poll for hops fed by another hop's sink: their
+    * clock starts the next trigger when the upstream sink or their own
+    * commit log gains an entry, so 1 s only bounds a wait in which
+    * neither does (a missed wake, or a path not on local disk). Each
+    * idle poll re-reads the upstream sink log. Three idle hops measured
+    * 0.033 cores with the wake's 10 ms checks, 0.024-0.027 with the 1 s
+    * poll alone and 0.011 on the 5 s clock. `ProcessingTime(0)` is a
+    * busy poll: ~0.65 cores idle.
     */
   val HandoffTrigger: Trigger = Trigger.ProcessingTime("1 second")
 
@@ -421,24 +430,6 @@ object Streams {
       }
   }
 
-  // ---- sinks (K1-K3) ----
-
-  /** Append-mode snappy-parquet streaming sink with optional partition
-    * columns — the shape all three hops share.
-    */
-  def parquetSink(df: DataFrame, path: String, checkpoint: String,
-                  partitionCols: Seq[String] = Nil,
-                  trigger: Trigger = DefaultTrigger): DataStreamWriter[Row] = {
-    val w = df.writeStream
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .option("compression", "snappy")
-      .outputMode("append")
-      .trigger(trigger)
-    if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w
-  }
-
   // ---- the three hops (K5 lifecycle; call .awaitTermination() on the
   //      returned query in a real deployment) ----
 
@@ -449,8 +440,8 @@ object Streams {
   def kafkaLikeToBronze(kafkaFrame: DataFrame, bronzeDir: String,
                         checkpoint: String,
                         trigger: Trigger = DefaultTrigger): StreamingQuery =
-    parquetSink(Bronze.fromKafkaLike(kafkaFrame), bronzeDir, checkpoint,
-      trigger = trigger).start()
+    ParquetSinkQuery.start(Bronze.fromKafkaLike(kafkaFrame), bronzeDir, checkpoint,
+      trigger = trigger)
 
   /** Hop 2: bronze dir → parsed, deduped silver parquet partitioned by
     * event_date (bronze_to_silver_trades.py; backfill = the batch path
@@ -460,7 +451,7 @@ object Streams {
                      checkpoint: String, watermark: String = DefaultWatermark,
                      trigger: Trigger = HandoffTrigger,
                      maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
-    parquetSink(
+    ParquetSinkQuery.start(
       // repartition on the sink partition column: without it the deduped
       // rows stay hash-partitioned by dedup keys, so EVERY task writes a
       // file into EVERY event_date dir (tasks × dates tiny files per
@@ -471,7 +462,7 @@ object Streams {
         Silver.projectToSilver(bronzeStream(spark, bronzeDir, maxFilesPerTrigger)),
         watermark).repartition(col("event_date")),
       silverDir, checkpoint, partitionCols = Seq("event_date"),
-      trigger = trigger).start()
+      trigger = trigger, upstream = Some(bronzeDir))
 
   /** Hop 3: silver dir → finalized 1-minute bars, partitioned by
     * (bar_date, symbol) by default (silver_to_gold_bars.py; partition
@@ -493,14 +484,14 @@ object Streams {
                    trigger: Trigger = HandoffTrigger,
                    maxFilesPerTrigger: Option[Int] = None,
                    partitionCols: Seq[String] = Seq("bar_date", "symbol")): StreamingQuery =
-    parquetSink(
+    ParquetSinkQuery.start(
       // same write-amplification control as the silver hop: one file per
       // partition dir per batch instead of one per task×dir
       goldBarsStream(silverStream(spark, silverDir, maxFilesPerTrigger),
         barWidth, watermark)
         .repartition(partitionCols.map(col): _*),
       goldDir, checkpoint, partitionCols = partitionCols,
-      trigger = trigger).start()
+      trigger = trigger, upstream = Some(silverDir))
 
   /** Runs one micro-batch's sink work; a failure is recorded with
     * [[HarnessGuard]] (Spark may retry it out of sight), then rethrown.

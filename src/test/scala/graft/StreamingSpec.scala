@@ -182,8 +182,9 @@ class StreamingSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("hops 1-3 under their default triggers: ≤2 s handoffs, gold exact") {
+  test("hops 1-3 under their default triggers: ≤500 ms handoffs, gold exact") {
     import java.nio.file.{Paths, StandardCopyOption}
+    import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
     import graft.streaming.Pipeline
     val root = tmpDir("graft_prod_triggers")
     val Seq(rendered, staging, landing, bronze, silver, gold) =
@@ -262,19 +263,31 @@ class StreamingSpec extends SparkSpec {
       assert(wantRows.size == 3 * 5) // 3 symbols × 5 minutes
       assert(gotRows == wantRows)
 
-      // each downstream hop's first data batch starts within 2 s of the
-      // end of its upstream's first data batch (a shared 5 s clock makes
-      // this ~4 s: the downstream lists its source before the commit)
-      def firstData(q: org.apache.spark.sql.streaming.StreamingQuery) =
-        q.recentProgress.filter(_.numInputRows > 0).minBy(_.batchId)
-      def startMs(p: org.apache.spark.sql.streaming.StreamingQueryProgress) =
+      // each downstream hop's first data batch starts within 500 ms of
+      // the end of its upstream's first data batch, and the gold hop's
+      // next batch (the one that runs on the watermark its first data
+      // batch advanced) within 500 ms of that batch's end: both wake on
+      // a commit. A shared 5 s clock makes a handoff ~4 s (the
+      // downstream lists its source before the commit); the 1 s
+      // fallback grid alone makes it 0.3-0.6 s.
+      def batches(q: StreamingQuery) =
+        q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+      def firstData(q: StreamingQuery) =
+        batches(q).filter(_.numInputRows > 0).minBy(_.batchId)
+      def startMs(p: StreamingQueryProgress) =
         java.time.Instant.parse(p.timestamp).toEpochMilli
+      def gapMs(before: StreamingQueryProgress, after: StreamingQueryProgress) =
+        startMs(after) - (startMs(before) + before.batchDuration)
       qs.zip(Seq("hop1", "hop2", "hop3")).sliding(2).foreach {
         case Seq((up, _), (down, hop)) =>
-          val u = firstData(up)
-          val gap = startMs(firstData(down)) - (startMs(u) + u.batchDuration)
-          assert(gap <= 2000L, s"$hop picked up $gap ms after its upstream")
+          val gap = gapMs(firstData(up), firstData(down))
+          assert(gap <= 500L, s"$hop picked up $gap ms after its upstream")
       }
+      val bars = firstData(qs(2))
+      val flush = batches(qs(2)).find(_.batchId == bars.batchId + 1)
+      assert(flush.nonEmpty, "hop3 ran no batch after its first data batch")
+      val gap = gapMs(bars, flush.get)
+      assert(gap <= 500L, s"hop3's flush batch started $gap ms after its data batch")
     } finally qs.foreach(_.stop())
   }
 
