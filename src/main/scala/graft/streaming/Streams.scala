@@ -32,7 +32,7 @@ import graft.operators.{Bronze, Dedup, Gold, Silver}
   *
   * Trigger policy: a hop's default trigger follows where it reads from.
   *  - The INGEST edge ([[kafkaLikeToBronze]]) reads an external source
-  *    and keeps the reference's 5 s ingest clock ([[DefaultTrigger]]):
+  *    and runs on the reference's 2 s ingest clock ([[DefaultTrigger]]):
   *    that interval sizes its batches and file count.
   *  - The hops that read ANOTHER HOP's sink ([[bronzeToSilver]],
   *    [[silverToGold]]) are commit-woken: their trigger clock
@@ -48,7 +48,9 @@ import graft.operators.{Bronze, Dedup, Gold, Silver}
   *    and every handoff sits out a whole tick (measured pickups
   *    3.0–4.5 s).
   *  Event→gold freshness is thus bounded by bar_end + watermark + ≤1
-  *  ingest tick + the three batch times (each handoff starts at the
+  *  ingest tick (2 s) + four batch times: hop 1, hop 2, hop 3's data
+  *  batch and hop 3's append-mode flush batch, which emits the bars the
+  *  data batch's watermark finalized (each handoff starts at the
   *  upstream commit).
   *  AvailableNow callers (the e2e pipelines, tests) pass their trigger
   *  explicitly and are unaffected: AvailableNow never waits on a clock.
@@ -56,8 +58,19 @@ import graft.operators.{Bronze, Dedup, Gold, Silver}
 object Streams {
 
   val DefaultWatermark = "2 minutes"
-  /** The ingest clock: reference kafka_to_bronze_trades.py:22. */
-  val DefaultTrigger: Trigger = Trigger.ProcessingTime("5 seconds")
+  /** The ingest clock, 2 s: the reference deploys its bronze job with
+    * `--trigger "2 seconds"` (collect_data.sh:46); 5 s is only the job
+    * script's own default (kafka_to_bronze_trades.py:22). A tick is the
+    * one freshness term the pipeline adds before hop 1 (mean ½ interval),
+    * and a shorter one also makes every hop's batches smaller. The cost
+    * is more batches and files: a traced `live_tail` pass (seed 711) ran
+    * hop 1/2/3 batches 5/10/10 → 12/24/23 and wrote bronze/silver/gold
+    * files 20/5/4 → 46/12/8 on the 5 s → 2 s clock.
+    * [[silverToGoldLive]] and [[silverToGoldLiveHourly]] default to it
+    * too; every caller of those two passes AvailableNow, which never
+    * reads the interval.
+    */
+  val DefaultTrigger: Trigger = Trigger.ProcessingTime("2 seconds")
   /** The fallback poll for hops fed by another hop's sink: their
     * clock starts the next trigger when the upstream sink or their own
     * commit log gains an entry, so 1 s only bounds a wait in which

@@ -288,6 +288,11 @@ class StreamingSpec extends SparkSpec {
       assert(flush.nonEmpty, "hop3 ran no batch after its first data batch")
       val gap = gapMs(bars, flush.get)
       assert(gap <= 500L, s"hop3's flush batch started $gap ms after its data batch")
+
+      // hop 1 ticks on the 2 s ingest clock: the drops land over ~8.4 s,
+      // so it takes them in as at least 4 data batches (2-3 on a 5 s clock)
+      val hop1Data = batches(qs.head).count(_.numInputRows > 0)
+      assert(hop1Data >= 4, s"hop1 ran $hop1Data data batches while the drops landed")
     } finally qs.foreach(_.stop())
   }
 
